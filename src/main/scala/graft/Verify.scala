@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -22,7 +23,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // independent mart subtrees build in parallel before the serial dump
-    try Models.prebuildMarts(spark, sfDir) catch { case _: Throwable => () }
+    // a barrier that fails here fails again, loudly, in its own query
+    try Models.prebuildMarts(spark, sfDir) catch { case NonFatal(e) =>
+      System.err.println(s"[verify] prebuild pass failed: $e")
+    }
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>

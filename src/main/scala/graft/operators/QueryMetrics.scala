@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -69,7 +70,10 @@ object QueryMetrics {
           case other => other.children.headOption.flatMap(first)
         })
       first(qe.executedPlan).getOrElse(-1L)
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[query-metrics] output rows unreadable: $e")
+      -1L
+    }
 
   private final class Listener(session: SparkSession) extends QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =

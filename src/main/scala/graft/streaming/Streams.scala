@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -40,7 +41,10 @@ object Streams {
     * the one-shot streams carry bounded state (5 event types / active
     * users), so capping at 8 keeps the same results (partitioning
     * never changes aggregation output) while quartering the per-batch
-    * state-store setup. A CAP, not a set: sessions already below it
+    * tasks and store commits. A commit's cost is its checkpoint-file
+    * writes, which [[graft.io.ForkFreeLocalFs]] keeps free of the
+    * `chmod`/`readlink` processes Hadoop's local file system would
+    * start for each file. A CAP, not a set: sessions already below it
     * (Verify/tests run 4) keep their smaller value — raising would be
     * the opposite of the point. A real deployment sizes this to state
     * volume, not scans. */
@@ -52,8 +56,9 @@ object Streams {
     * at 8 partitions × 2 batches that is 64 store commits for a
     * bounded one-shot whose per-user join state fits comfortably in a
     * handful of partitions. 4 halves the commit fan-out with results
-    * unchanged (partitioning never changes join output); a real
-    * deployment sizes this to state volume. */
+    * unchanged (partitioning never changes join output). Each commit
+    * writes its own checkpoint files, so the fan-out sets the files
+    * written per batch; a real deployment sizes this to state volume. */
   val JoinShufflePartitions = 4
   private val streamConfLock = new Object
 
@@ -61,11 +66,15 @@ object Streams {
     * `cap` (default [[StreamShufflePartitions]]), restoring the
     * session conf after. The conf is read at `query.start()`, so the
     * override must span it; serialized so concurrent one-shots don't
-    * interleave set/restore. */
+    * interleave set/restore. Every one-shot passes here before its
+    * `start()`, so this is also where the context's Hadoop conf gets
+    * the fork-free local checkpoint file system
+    * ([[graft.io.ForkFreeLocalFs]]). */
   private def withStreamPartitions[T](spark: SparkSession,
                                       cap: Int = StreamShufflePartitions)
                                      (body: => T): T =
     streamConfLock.synchronized {
+      graft.io.ForkFreeLocalFs.install(spark.sparkContext.hadoopConfiguration)
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)
       spark.conf.set(key, math.min(prev.toInt, cap).toString)
@@ -122,7 +131,12 @@ object Streams {
         s""""wal_ms":${dur("walCommit") + dur("commitOffsets")},""" +
         s""""state_commit_ms":${stores.map(_.commitTimeMs).sum},""" +
         s""""state_stores":${stores.map(_.numStateStoreInstances).sum}}"""): Unit
-    } catch { case _: Throwable => () }
+    } catch {
+      // drop the previous run's entry, or it passes for this run's
+      case NonFatal(e) =>
+        lastAccounting.remove(name)
+        System.err.println(s"[stream] $name: progress accounting failed: $e")
+    }
 
   /** File-based streaming source with the events schema (a production
     * deploy would point this at an object-store drop zone or Kafka). */
@@ -1292,10 +1306,16 @@ object Streams {
     * desc) reduces to `event_id desc` here: user_id is the partition
     * key (constant) and event_id — the struct's next field — is
     * globally unique, so later fields can never be compared. The
-    * oracle encodes exactly that. */
+    * oracle encodes exactly that.
+    *
+    * The mart is scoped like the checkpoint: a run under a
+    * [[scratchTag]] gets its own mart, so its first batch creates the
+    * mart instead of upserting into the one an earlier tagged run left
+    * behind. Untagged, the mart is `stream_user_latest`. */
   def mergeSinkOnce(spark: SparkSession, sfDir: String): DataFrame = withStreamPartitions(spark) {
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val name = "stream_user_latest"
+    val name = "stream_user_latest" +
+      (if (scratchTag.isEmpty) "" else "_" + scratchTag.replaceAll("[^A-Za-z0-9]", "_"))
     val scratch = Paths.get(
       System.getProperty("java.io.tmpdir"), "graft-msink",
       scratchId(spark),
