@@ -1,6 +1,6 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, xxhash64, bit_xor}
 
 /** Benchmark main (driver contract): runs every registered query on
@@ -35,6 +35,11 @@ object Bench {
     }
   }
 
+  /** The full-materialization frame: xxhash64 over every output
+    * column, bit_xor-reduced to one row. */
+  def fingerprint(df: DataFrame): DataFrame =
+    df.select(xxhash64(df.columns.map(col).toSeq: _*).as("h")).agg(bit_xor(col("h")))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -47,16 +52,7 @@ object Bench {
     // semantic metric queries measurably regressed (−0.1..−0.45 s
     // each). Measured, no mechanism to win at this layout, reverted;
     // see OPTIMIZATION_r18.md.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.operators.BoundedWindow.ExcludedRule)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Measured shuffle bytes of an EXECUTED plan (final AQE plan, reused
     // exchanges counted once) — the per-query artifact that answers "is
     // there a shuffle here that becomes the bottleneck at scale" with a
@@ -68,9 +64,7 @@ object Bench {
     val shuffleMb = scala.collection.mutable.Map[String, Double]()
     def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
             name: String = ""): Unit = {
-      val df = fn(spark, sfDir)
-      val agged = df.select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
-        .agg(bit_xor(col("h")))
+      val agged = fingerprint(fn(spark, sfDir))
       agged.collect()
       if (name.nonEmpty)
         try shuffleMb(name) = shuffleBytesOf(agged) / 1e6
@@ -105,7 +99,7 @@ object Bench {
     val tW0 = System.nanoTime()
     val prebuildFailed =
       try Models.prebuildMarts(spark, sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] prebuild pass itself failed: ${e.getMessage}")
         Seq("__prebuild_pass__")
       }
@@ -113,11 +107,8 @@ object Bench {
     // embeddings): their first consumer would otherwise pay the cold
     // page-cache read of the whole file inside its timed section.
     Seq("events", "documents", "embeddings").foreach { t =>
-      try {
-        val df = Tables.read(spark, sfDir, t)
-        df.select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
-          .agg(bit_xor(col("h"))).collect()
-      } catch { case NonFatal(e) =>
+      try fingerprint(Tables.read(spark, sfDir, t)).collect()
+      catch { case NonFatal(e) =>
         System.err.println(s"[bench] raw-table warm read of $t failed: $e")
       }
     }
@@ -167,7 +158,7 @@ object Bench {
       graft.streaming.Streams.scratchTag = tag
       benchQueries.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try run(fn, name) catch { case e: Throwable =>
+        try run(fn, name) catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           if (!failed.contains(name)) failed += name
         }
@@ -244,10 +235,9 @@ object Bench {
         // a subset run must not clobber the full-suite artifact
         if (subset.isDefined) "BENCH_LOCAL_SUBSET.json" else "BENCH_LOCAL.json")
       java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable => System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}") }
     val top10 = results.sortBy(-_._2).take(10)
     println(s"""{"min_total_sec":$total,"cold_total_sec":$coldTotal,"warm_total_sec":$warmTotal,"warm2_total_sec":$warm2Total,"n_queries":${results.size},"failed_n":${failed.size},"prebuild_failed_n":${prebuildFailed.size},"gc_ms":{"warmup":$gcWarm,"cold":$gcCold,"warm":$gcWarmPass,"warm2":$gcWarm2Pass},"min_top10":${qjson(top10)}}""")
-    org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -1919,6 +1919,7 @@ object Models {
   def prebuildMarts(s: SparkSession, d: String): Seq[String] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
+    import scala.util.control.NonFatal
     implicit val ec: scala.concurrent.ExecutionContext = Mat.ec
     val roots: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
       "customers" -> (customers _), "products" -> (products _),
@@ -2009,7 +2010,7 @@ object Models {
     // (ADVICE r3 #5).
     futs.flatMap { case (n, f) =>
       try { Await.result(f, Duration.Inf); None }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[prebuild] mart build failed for $n: ${e.getMessage}")
         Some(n)
       }

@@ -345,16 +345,7 @@ object Scale {
       .split(",").map(_.trim.toInt).toSeq
     val passes = sys.env.getOrElse("SPARK_GRAFT_SCALE_PASSES", "2").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.operators.BoundedWindow.ExcludedRule)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val root = s"${System.getProperty("java.io.tmpdir")}/graft-scale/" +
       spark.sparkContext.applicationId
@@ -415,10 +406,7 @@ object Scale {
           if (!skipped.contains(name)) {
             val t0 = System.nanoTime()
             try {
-              val df = fn(spark, alias)
-              val agged = df
-                .select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
-                .agg(bit_xor(col("h")))
+              val agged = Bench.fingerprint(fn(spark, alias))
               agged.collect()
               val sec = (System.nanoTime() - t0) / 1e9
               val mb = tools.PlanMetrics.shuffleBytesOf(agged) / 1e6
@@ -479,7 +467,6 @@ object Scale {
       java.nio.file.Files.write(p, (out + "\n").getBytes("UTF-8"))
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[scale] SCALE_LOCAL.json write failed: ${e.getMessage}") }
-    org.apache.spark.sql.graftbridge.Bridge.stopStateStoreMaintenance()
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

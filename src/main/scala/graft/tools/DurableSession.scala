@@ -1,9 +1,11 @@
 package graft.tools
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.GraftSession
 
 /** Subprocess entry points for the durable-mart cross-JVM specs
   * (`MatDurableSpec`): each mode opens a FRESH SparkSession — a
@@ -26,18 +28,8 @@ import org.apache.spark.sql.streaming.Trigger
 object DurableSession {
 
   private def session(logRoot: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-durable-child")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.operators.BoundedWindow.ExcludedRule)
-      .config(graft.Mat.LogRootConf, logRoot)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.local("4")
+    s.conf.set(graft.Mat.LogRootConf, logRoot)
     s
   }
 
@@ -61,7 +53,7 @@ object DurableSession {
             val rows = df.count()
             require(v == expectV.toInt, s"adopted version $v != expected $expectV")
             require(rows == expectRows.toLong, s"adopted rows $rows != expected $expectRows")
-            spark.stop(); 0
+            GraftSession.stop(spark); 0
           case "merge-restart" =>
             val Array(_, logRoot, sfDir, ingestDir, ckptDir, name) = args
             val spark = session(logRoot)
@@ -80,12 +72,12 @@ object DurableSession {
             val extra = got.exceptAll(expected).count()
             require(missing == 0 && extra == 0,
               s"restarted merge mart diverged: $missing missing, $extra extra rows")
-            spark.stop(); 0
+            GraftSession.stop(spark); 0
           case other =>
             System.err.println(s"unknown mode: $other"); 2
         }
       } catch {
-        case t: Throwable =>
+        case NonFatal(t) =>
           System.err.println(s"DurableSession failed: $t")
           t.printStackTrace()
           1

@@ -22,6 +22,13 @@ object Bridge {
   def stopStateStoreMaintenance(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
+  /** Block until every listener event posted so far is delivered.
+    * `QueryExecutionListener` callbacks ride that bus, so once an
+    * action has returned, this makes its callbacks have run.
+    * `SparkContext.listenerBus` is `private[spark]`. */
+  def awaitListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `localCheckpoint(eager)` that PRESERVES the checkpointed plan's
     * output partitioning (and ordering) under AQE.
     *
